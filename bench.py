@@ -86,7 +86,6 @@ def run_replay(spark, tag: str) -> dict:
     from kafka_connect_claim_check_smt_spark.sources.changelog import synth_change_events
     from kafka_connect_claim_check_smt_spark.streaming.replay import apply_cdc_batch, read_back
 
-    offload_stage = os.environ.get("SPARK_GRAFT_OFFLOAD_STAGE", "post_merge")
     merge_strategy = os.environ.get("SPARK_GRAFT_MERGE_STRATEGY", "sort")
     root = SCRATCH / f"replay-{tag}"
     shutil.rmtree(root, ignore_errors=True)
@@ -115,7 +114,7 @@ def run_replay(spark, tag: str) -> dict:
     warm_hi = int(REPLAY_EVENTS * WARM_FRACTION)
     apply_cdc_batch(
         log.filter(F.col("commit_seq") < warm_hi), 0, table, cfg,
-        uploaded_at_ms=0, offload_stage=offload_stage, merge_strategy=merge_strategy,
+        uploaded_at_ms=0, merge_strategy=merge_strategy,
     )
 
     chunk = (REPLAY_EVENTS - warm_hi) // REPLAY_EPOCHS + 1
@@ -123,7 +122,7 @@ def run_replay(spark, tag: str) -> dict:
     for b in range(REPLAY_EPOCHS):
         lo = warm_hi + b * chunk
         batch = log.filter((F.col("commit_seq") >= lo) & (F.col("commit_seq") < lo + chunk))
-        apply_cdc_batch(batch, b + 1, table, cfg, uploaded_at_ms=0, offload_stage=offload_stage, merge_strategy=merge_strategy)
+        apply_cdc_batch(batch, b + 1, table, cfg, uploaded_at_ms=0, merge_strategy=merge_strategy)
     n_final = read_back(spark, table, cfg).count()
     seconds = time.time() - t0
 

@@ -46,7 +46,3 @@ class DataIntegrityError(ClaimCheckError):
     sha256 equality and keeps the size check.
     """
 
-
-class SerializationError(ClaimCheckError):
-    """Record value (de)serialization failed (≙ Kafka's SerializationException
-    paths in RecordValueSerializer.java:179-241)."""

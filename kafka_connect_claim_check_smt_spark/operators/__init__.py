@@ -4,7 +4,6 @@ from .claimcheck import (
     PLACEHOLDER,
     hydrate,
     offload,
-    offload_conditional,
     oversize_predicate,
 )
 from .dedup import committed_epoch_anti_join, exact_dedup, lww_dedup
@@ -67,7 +66,6 @@ __all__ = [
     "stratified_sample",
     "ngram_jaccard_pairs",
     "offload",
-    "offload_conditional",
     "oversize_predicate",
     "quality_features",
     "repetition_features",

@@ -6,11 +6,10 @@ Spark-first restatement of the reference's two transforms:
   size predicate → blob store → placeholder + metadata. Here the predicate is a
   pure Catalyst expression (``octet_length(content) > threshold`` — R3,
   ClaimCheckSourceTransform.java:103-122) evaluated JVM-side in whole-stage
-  codegen, and **only the oversized slice ever crosses the Arrow boundary into
-  Python** (the reference serializes every record before checking the threshold,
-  ClaimCheckSourceTransform.java:80-84 — at 10^10 rows that mistake is fatal, so
-  the plan is shaped manually: filter → UDF → unionByName; Catalyst cannot push
-  a predicate through an opaque pandas UDF).
+  codegen, and it MASKS the UDF input: ``when(oversized, content)`` sends
+  only oversized payloads into Python, inline rows cross as NULLs (the
+  reference serializes every record before checking the threshold,
+  ClaimCheckSourceTransform.java:80-84 — at 10^10 rows that mistake is fatal).
 
 - hydrate ≙ ClaimCheckSinkTransform.apply (claimcheck/ClaimCheckSinkTransform.java:57-122):
   null-metadata passthrough → retrieve → integrity check → restore → drop
@@ -22,30 +21,23 @@ plus the sha256 field. NULL struct ⇔ "no header" ⇔ inline payload.
 
 Scale notes (100 TB / 1000 executors):
 - The size predicate and metadata struct construction are codegen'd; no shuffle.
+- The plan is linear (one projection around one pandas UDF): the input plan is
+  evaluated exactly once, so offload can sit inside a larger pipeline — the
+  replay runs it after the merge's LWW dedup, inside the write job — without
+  a persist. Every row crosses the Arrow boundary, but an inline row costs
+  one NULL slot and no I/O.
 - Blob writes are executor-local, content-addressed (idempotent under task
-  retry), and batched per Arrow batch.
-- The oversized slice is optionally salt-repartitioned before the UDF so a hot
-  repo's giant files spread across tasks instead of serializing on one executor.
-- split/union reads the input twice; for a parquet/Iceberg scan that is two
-  column-pruned scans (cheap) and avoids shipping the ~95% inline slice through
-  Python. For expensive upstream plans pass ``strategy="single_pass"``
-  (one mapInPandas over everything) or persist upstream.
+  retry), deduplicated per Arrow batch, and pooled for latency-bound stores.
 """
 
 from __future__ import annotations
 
 import hashlib
 from collections.abc import Callable
-from typing import Iterator
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ..config import ClaimCheckConfig
 from ..errors import DataIntegrityError
@@ -121,21 +113,25 @@ def _io_map(store: BlobStore, fn, items: list):
 
 
 def _store_put_fn(store_factory: StoreFactory):
-    """Arrow-batched put: dedupe identical payloads within the batch (one put
-    per distinct sha — content-addressed keys make repeats free), fan the
-    distinct puts out over a thread pool. The store+pool are built lazily once
+    """Arrow-batched put over a masked column: NULL rows (inline payloads) map
+    to NULL and do no I/O; the rest are deduped within the batch (one put per
+    distinct sha — content-addressed keys make repeats free) and the distinct
+    puts fanned out over a thread pool. The store+pool are built lazily once
     per python worker and reused across batches (≙ configure-once,
     ClaimCheckSourceTransform.java:44-58)."""
     holder: list = []
 
-    def put_batch(series):  # pd.Series[str] -> pd.Series[str]
+    def put_batch(series):  # pd.Series[str|None] -> pd.Series[str|None]
         if not holder:
             holder.append(store_factory())
         store = holder[0]
 
-        keys = {}  # sha -> bytes, distinct payloads only
+        keys = {}  # sha -> bytes, distinct non-null payloads only
         row_keys = []
         for s in series:
+            if s is None:
+                row_keys.append(None)
+                continue
             data = s.encode("utf-8")
             key = hashlib.sha256(data).hexdigest()
             row_keys.append(key)
@@ -143,7 +139,9 @@ def _store_put_fn(store_factory: StoreFactory):
         urls = dict(
             zip(keys, _io_map(store, lambda kv: store.put(kv[0], kv[1]), list(keys.items())))
         )
-        return series.__class__([urls[k] for k in row_keys], index=series.index)
+        return series.__class__(
+            [None if k is None else urls[k] for k in row_keys], index=series.index
+        )
 
     return put_batch
 
@@ -196,15 +194,20 @@ def offload(
     *,
     uploaded_at_ms: int | None = None,
     store_factory: StoreFactory | None = None,
-    salt_partitions: int | None = None,
-    strategy: str = "split",
     placeholder: str | None = PLACEHOLDER,
 ) -> DataFrame:
     """R1 — conditional claim-check offload.
 
     Returns ``df`` with ``content_col`` replaced by the placeholder on offloaded
     rows and a ``claim_check`` struct column (NULL ⇔ inline). Null content
-    passes through untouched (≙ ClaimCheckSourceTransform.java:62-63).
+    passes through untouched (≙ ClaimCheckSourceTransform.java:62-63). Rows
+    that already carry a non-NULL ``claim_check`` (offloaded earlier; their
+    content is the placeholder) keep their reference and are not re-offloaded.
+
+    One linear plan: the put UDF's input is masked with
+    ``when(oversized, content)``, so inline rows cross the
+    Arrow boundary as NULLs and do no I/O, and the upstream plan is evaluated
+    once — no persist needed when offload runs inside a larger pipeline.
 
     ``uploaded_at_ms``: fix the upload timestamp for deterministic output
     (tests/oracles); default is current epoch millis
@@ -215,132 +218,10 @@ def offload(
     ``None`` for schemaless payloads (≙ forSchemaless() → null,
     RecordValueDefaults.java:76-78) — besides matching the reference, a NULL
     placeholder keeps eager JSON/variant parsers downstream from choking on
-    "" in plan branches the optimizer can't prove empty.
-    """
-    factory = store_factory or (lambda: make_store(cfg))
-    if strategy == "single_pass":
-        return _offload_single_pass(df, cfg, content_col, uploaded_at_ms, factory, placeholder)
-
-    size = F.octet_length(F.col(content_col))
-    uploaded = (
-        F.lit(uploaded_at_ms).cast("long")
-        if uploaded_at_ms is not None
-        else F.unix_millis(F.current_timestamp())
-    )
-
-    is_big = oversize_predicate(content_col, cfg.threshold_bytes)
-    null_claim = F.lit(None).cast(CLAIM_CHECK_SCHEMA)
-
-    small = df.filter(~F.coalesce(is_big, F.lit(False))).withColumn(
-        CLAIM_CHECK_COL, null_claim
-    )
-
-    big = df.filter(is_big)
-    if salt_partitions:
-        # spread hot-repo skew across tasks before the I/O-bound UDF.
-        # Hash-partition on the content hash: a plain repartition(n) is
-        # round-robin, which sorts every oversized row first
-        # (spark.sql.execution.sortBeforeRepartition) — measured 2× slower.
-        big = big.repartition(salt_partitions, F.xxhash64(F.col(content_col)))
-
-    put_udf = F.pandas_udf(_store_put_fn(factory), StringType())
-    big = (
-        big.withColumn("__cc_url", put_udf(F.col(content_col)))
-        .withColumn(
-            CLAIM_CHECK_COL,
-            F.struct(
-                F.col("__cc_url").alias("reference_url"),
-                size.cast("long").alias("original_size_bytes"),
-                F.sha2(F.col(content_col), 256).alias("sha256"),
-                uploaded.alias("uploaded_at"),
-            ),
-        )
-        # R6 placeholder synthesis (cast: lit(None) must keep the column type)
-        .withColumn(content_col, F.lit(placeholder).cast("string"))
-        .drop("__cc_url")
-    )
-    return small.unionByName(big)
-
-
-def _offload_single_pass(
-    df: DataFrame,
-    cfg: ClaimCheckConfig,
-    content_col: str,
-    uploaded_at_ms: int | None,
-    factory: StoreFactory,
-    placeholder: str | None = PLACEHOLDER,
-) -> DataFrame:
-    """One mapInPandas pass: every row crosses into Python, but the input plan
-    is evaluated exactly once. Use when upstream is expensive and not cached."""
-    import pandas as pd
-
-    out_schema = StructType(df.schema.fields + [StructField(CLAIM_CHECK_COL, CLAIM_CHECK_SCHEMA, True)])
-    threshold = cfg.threshold_bytes
-    fixed_ts = uploaded_at_ms
-    cols = [f.name for f in df.schema.fields]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time as _time
-
-        store = factory()
-        for pdf in batches:
-            cc = []
-            contents = pdf[content_col]
-            for s in contents:
-                if s is None:
-                    cc.append(None)
-                    continue
-                data = s.encode("utf-8")
-                if len(data) <= threshold:
-                    cc.append(None)
-                    continue
-                key = hashlib.sha256(data).hexdigest()
-                url = store.put(key, data)
-                cc.append(
-                    {
-                        "reference_url": url,
-                        "original_size_bytes": len(data),
-                        "sha256": key,
-                        "uploaded_at": fixed_ts if fixed_ts is not None else int(_time.time() * 1000),
-                    }
-                )
-            pdf = pdf.copy()
-            pdf[CLAIM_CHECK_COL] = cc
-            offloaded = pdf[CLAIM_CHECK_COL].notna()
-            pdf.loc[offloaded, content_col] = placeholder
-            yield pdf[cols + [CLAIM_CHECK_COL]]
-
-    return df.mapInPandas(run, out_schema)
-
-
-def offload_conditional(
-    df: DataFrame,
-    cfg: ClaimCheckConfig,
-    content_col: str = "content",
-    *,
-    uploaded_at_ms: int | None = None,
-    store_factory: StoreFactory | None = None,
-    placeholder: str | None = PLACEHOLDER,
-) -> DataFrame:
-    """Linear-plan offload: no filter/union branch, so it can sit INSIDE a
-    single-pass pipeline (e.g. after the merge dedup, before the write)
-    without forcing a persist or a double evaluation of the upstream plan.
-
-    ``placeholder`` as in :func:`offload` — "" for schema'd payloads
-    (RecordValueDefaults.java:67), ``None`` for schemaless
-    (forSchemaless(), RecordValueDefaults.java:76-78).
-
-    The UDF input is masked with ``when(oversized, content).otherwise(null)``:
-    every row crosses the Arrow boundary, but inline rows cross as nulls
-    (near-free) and do no I/O. Rows that already carry a claim_check struct
-    (previously offloaded; content is the placeholder) are preserved as-is.
-    Cost model vs ``offload``: pays ~row-count Arrow overhead, saves one full
-    evaluation of the upstream plan — the right trade after an expensive
-    dedup; the split/union form is better straight off a cheap scan.
+    "".
     """
     factory = store_factory or (lambda: make_store(cfg))
     has_cc = CLAIM_CHECK_COL in df.columns
-    size = F.octet_length(F.col(content_col))
     needs = oversize_predicate(content_col, cfg.threshold_bytes)
     if has_cc:
         needs = needs & F.col(CLAIM_CHECK_COL).isNull()
@@ -350,52 +231,29 @@ def offload_conditional(
         else F.unix_millis(F.current_timestamp())
     )
 
-    def put_masked(series):  # pd.Series[str|None] -> pd.Series[str|None]
-        store = getattr(put_masked, "_store", None)
-        if store is None:
-            store = factory()
-            put_masked._store = store
-
-        keys = {}  # sha -> bytes, distinct non-null payloads only
-        row_keys = []
-        for s in series:
-            if s is None:
-                row_keys.append(None)
-                continue
-            data = s.encode("utf-8")
-            key = hashlib.sha256(data).hexdigest()
-            row_keys.append(key)
-            keys.setdefault(key, data)
-        urls = dict(
-            zip(keys, _io_map(store, lambda kv: store.put(kv[0], kv[1]), list(keys.items())))
-        )
-        return series.__class__(
-            [None if k is None else urls[k] for k in row_keys], index=series.index
-        )
-
-    put_udf = F.pandas_udf(put_masked, StringType())
-    url = put_udf(F.when(needs, F.col(content_col)).otherwise(F.lit(None)))
-    out = df.withColumn("__cc_url", url)  # single UDF site; referenced below by name
-
+    put_udf = F.pandas_udf(_store_put_fn(factory), StringType())
     new_cc = F.struct(
-        F.col("__cc_url").alias("reference_url"),
-        size.cast("long").alias("original_size_bytes"),
+        put_udf(F.when(needs, F.col(content_col))).alias("reference_url"),
+        F.octet_length(F.col(content_col)).cast("long").alias("original_size_bytes"),
         F.sha2(F.col(content_col), 256).alias("sha256"),
         uploaded.alias("uploaded_at"),
     )
-    offloaded_now = F.col("__cc_url").isNotNull()
-    cc = F.when(offloaded_now, new_cc)
+    # "offloaded" is decided by the Catalyst predicate, not by the UDF's
+    # output: a downstream filter on claim_check / content nullness (e.g.
+    # hydrate's inline/offloaded split) then simplifies to the predicate and
+    # neither re-runs nor duplicates the put UDF
+    cc = F.when(needs, new_cc)
     if has_cc:
         cc = F.coalesce(F.col(CLAIM_CHECK_COL), cc)
-    return (
-        out.withColumn(CLAIM_CHECK_COL, cc)
-        .withColumn(
-            content_col,
-            F.when(offloaded_now, F.lit(placeholder).cast("string")).otherwise(
+    # one projection: both columns are computed from the INPUT row
+    return df.withColumns(
+        {
+            CLAIM_CHECK_COL: cc,
+            # R6 placeholder synthesis (cast: lit(None) must keep the column type)
+            content_col: F.when(needs, F.lit(placeholder).cast("string")).otherwise(
                 F.col(content_col)
             ),
-        )
-        .drop("__cc_url")
+        }
     )
 
 

@@ -192,9 +192,14 @@ class MinHashIndex:
         the historical signature :meth:`remove` would need to find them.
         ``assume_new=True`` skips the re-add probe entirely (pure O(batch)
         — no read of the signature store at all) for callers who KNOW the
-        stream never re-sends a doc_id; re-adding under that promise leaves
-        stale band rows, the same class of contract as
-        ``LakeTable.append``'s new-keys promise.
+        stream never re-sends a doc_id, the same class of contract as
+        ``LakeTable.append``'s new-keys promise. Re-adding a changed doc
+        under that promise leaves its OLD band rows live, and they carry
+        the OLD signature: :meth:`probe` takes a partner's signature from
+        the band rows it matched, so a probe that matches only stale rows
+        verifies against the stale signature and returns a WRONG
+        ``est_jaccard_ppm`` — pairs can be reported or dropped on it, not
+        merely over-generated as candidates.
 
         Idempotent per ``epoch_id``: the signature append commits LAST, so a
         replayed epoch recomputes the identical split against unchanged
@@ -409,7 +414,12 @@ class MinHashIndex:
         round-trip total after featurization. Nothing scales with the index
         except the pruned bucket fraction. Indexes written before the sig
         column existed fall back to a second bucket-pruned signature fetch
-        for candidate partners."""
+        for candidate partners.
+
+        A changed doc re-added under ``add(assume_new=True)`` keeps stale
+        band rows carrying its OLD signature; a probe that matches only those
+        verifies against it and returns a WRONG ``est_jaccard_ppm`` (the pair
+        may be wrongly kept or dropped), not just an extra candidate."""
         if not 0 < threshold <= 1:
             raise ClaimCheckError("threshold must be in (0, 1]")
         thr_ppm = int(round(threshold * 1_000_000))

@@ -138,43 +138,6 @@ def _shingles_sql(text_expr: str, k: int, hasher: str = "sha256") -> str:
     )
 
 
-def minhash_signature(shingle_hashes: Column, num_hashes: int = 32, seed: int = 42) -> Column:
-    """MinHash signature (array<long>, length num_hashes): for permutation j,
-    min over shingles of (a_j * (h mod 2^31) + b_j) mod 2^61-1. Pure Catalyst.
-
-    The 31-bit reduction keeps products within 62 bits so the arithmetic is
-    exact under Spark 4's default ANSI overflow checking — and replayable in
-    64-bit engines without bigint promotion."""
-    sigs = []
-    for a, b in _perm_constants(num_hashes, seed):
-        sigs.append(
-            F.array_min(
-                F.transform(
-                    shingle_hashes,
-                    lambda h: F.pmod(
-                        F.pmod(h, F.lit(2**31)) * F.lit(a) + F.lit(b), F.lit(_MERSENNE)
-                    ),
-                )
-            )
-        )
-    return F.array(*sigs)
-
-
-def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Band the signature: array of (band_id, band_key) structs. The band key
-    is the comma-joined mins (string) — engine-portable, uniform."""
-    entries = []
-    for b in range(bands):
-        band = F.slice(signature, b * rows_per_band + 1, rows_per_band)
-        entries.append(
-            F.struct(
-                F.lit(b).alias("band"),
-                F.array_join(F.transform(band, lambda v: v.cast("string")), ",").alias("bh"),
-            )
-        )
-    return F.array(*entries)
-
-
 def signature_table(
     df: DataFrame,
     id_col: str,
@@ -829,30 +792,6 @@ def simhash_signatures(
     for i in range(bits):
         sim = sim + F.when(F.col(f"c{i}") > 0, F.lit(1 << i)).otherwise(F.lit(0)).cast("long")
     return per_doc.select("__id", sim.alias("s"))
-
-
-def simhash60(text: Column | str, k: int = 4, bits: int = 60, hasher: str = "sha256") -> Column:
-    """Scalar simhash from character k-gram hashes, pure Catalyst HOF fold:
-    bit_i(doc) = 1 if sum over grams of sign(bit_i(hash)) > 0.
-
-    Column-expression form of :func:`simhash_signatures` (which is ~30×
-    faster at corpus scale — interpreted lambdas vs codegen aggregates);
-    kept for ad-hoc per-row use and as a semantics cross-check in tests."""
-    grams = shingles(text, k, hasher=hasher)
-    idx = F.sequence(F.lit(0), F.lit(bits - 1))
-    counts = F.transform(
-        idx,
-        lambda i: F.aggregate(
-            grams,
-            F.lit(0),
-            lambda acc, h: acc + F.when(F.bit_get(h, i) == 1, 1).otherwise(-1),
-        ),
-    )
-    powers = F.array(*[F.lit(1 << i) for i in range(bits)])
-    contribs = F.zip_with(
-        counts, powers, lambda c, p: F.when(c > 0, p).otherwise(F.lit(0).cast("long"))
-    )
-    return F.aggregate(contribs, F.lit(0).cast("long"), lambda acc, v: acc + v)
 
 
 def simhash_dup_pairs(

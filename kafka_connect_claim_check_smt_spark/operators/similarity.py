@@ -135,12 +135,6 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def cosine_fixed(a: Column, b: Column, dim: int) -> Column:
-    return _dot_fixed(a, b, dim) / (
-        F.sqrt(_dot_fixed(a, a, dim)) * F.sqrt(_dot_fixed(b, b, dim))
-    )
-
-
 def _infer_dim(df: DataFrame, vec_col: str) -> int:
     # one-row driver lookup; array columns carry no static length in the
     # schema. Empty input / NULL first vector get a clear error here instead

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import ClaimCheckConfig
-from ..operators.claimcheck import PLACEHOLDER, offload_conditional
+from ..operators.claimcheck import PLACEHOLDER, offload
 from ..plans.lake import LakeTable
 
 
@@ -48,7 +48,6 @@ def apply_cdc_batch(
     order_col: str | None = None,
     tiebreaker: str | None = None,
     uploaded_at_ms: int | None = None,
-    offload_stage: str = "post_merge",
     merge_strategy: str = "sort",
     placeholder: str | None = PLACEHOLDER,
     extra_metrics: dict | None = None,
@@ -57,19 +56,6 @@ def apply_cdc_batch(
 ) -> dict:
     """One micro-batch through the full pipeline. Also usable for batch replay
     (call it per chunk with increasing batch_id).
-
-    ``offload_stage`` picks where the claim-check offload runs relative to the
-    merge's content shuffle:
-    - "post_merge" (default): offload only the WINNING oversized rows, inside
-      the write job after the exchange — minimal blob puts, but the exchange
-      carries the batch's full oversized content.
-    - "pre_merge": offload the incoming batch BEFORE the merge, so only
-      placeholders + claim_check structs cross the exchange. Costs extra puts
-      for rows that then lose the LWW merge (content-addressed keys keep the
-      extra writes idempotent); wins when the exchange is the bottleneck
-      (high oversized ratio × big payloads × many updates per key).
-    Both stages produce byte-identical table state (A/B measured in
-    BENCH/BASELINE.md).
 
     ``key_cols``/``order_col`` are assertions, not overrides: the merge always
     runs with the table's own configuration (the bucket layout is baked into
@@ -151,26 +137,16 @@ def apply_cdc_batch(
     # also the salted spread of hot repos: bucket = hash(repo, path)), dedups
     # by sort, then the transform offloads exactly the WINNING oversized rows
     # (conditional UDF — no plan branch) inside the write job itself.
-    if offload_stage == "pre_merge":
-        to_merge = offload_conditional(
-            batch, cfg, uploaded_at_ms=uploaded_at_ms, placeholder=placeholder
-        )
-        pre_write = None
-    elif offload_stage == "post_merge":
-        to_merge = batch
-        pre_write = lambda resolved: offload_conditional(  # noqa: E731
-            resolved, cfg, uploaded_at_ms=uploaded_at_ms, placeholder=placeholder
-        )
-    else:
-        raise ValueError(f"unknown offload_stage {offload_stage!r}")
     stats = table.merge(
-        to_merge,
+        batch,
         epoch_id=batch_id,
         metrics=metrics,
         strategy=merge_strategy,
         touched_hint=touched,
         tiebreaker=tiebreaker,
-        pre_write_transform=pre_write,
+        pre_write_transform=lambda resolved: offload(
+            resolved, cfg, uploaded_at_ms=uploaded_at_ms, placeholder=placeholder
+        ),
     )
     if not stats.get("skipped"):
         stats["metrics"] = metrics

@@ -40,9 +40,10 @@ def make_df(spark):
     return spark.createDataFrame(rows, "repo string, path string, content string")
 
 
-@pytest.mark.parametrize("strategy", ["split", "single_pass"])
-def test_offload_split_semantics(spark, cfg, strategy):
-    out = offload(make_df(spark), cfg, uploaded_at_ms=1234, strategy=strategy)
+def test_offload_semantics(spark, cfg):
+    out = offload(make_df(spark), cfg, uploaded_at_ms=1234)
+    # one linear plan: the input is evaluated once, no filter/union branch
+    assert "Union" not in out._jdf.queryExecution().executedPlan().toString()
     rows = {r.path: r for r in out.collect()}
     assert len(rows) == 5
     # inline rows: untouched content, NULL metadata
@@ -69,12 +70,11 @@ def test_blob_written_and_content_addressed(spark, cfg, tmp_store_dir):
     assert st.get(st.url_for(key)) == ("BIG " * 100).encode()
 
 
-@pytest.mark.parametrize("strategy", ["split", "single_pass"])
-def test_roundtrip_sha_equality(spark, cfg, strategy):
+def test_roundtrip_sha_equality(spark, cfg):
     """The flagship invariant: per-row content sha256 equality after
     offload → hydrate (BASELINE.json; ≙ NormalFlowFileSystemIntegrationTest)."""
     df = make_df(spark).filter(F.col("content").isNotNull())
-    restored = hydrate(offload(df, cfg, strategy=strategy), cfg)
+    restored = hydrate(offload(df, cfg), cfg)
     assert CLAIM_CHECK_COL not in restored.columns  # header removed
     orig = {(r.repo, r.path): r.content for r in df.collect()}
     back = {(r.repo, r.path): r.content for r in restored.collect()}
@@ -156,25 +156,21 @@ def test_offload_fails_after_exhaustion(spark, cfg, tmp_store_dir):
     assert "failed after" in str(ei.value)
 
 
-def test_offload_conditional_linear_plan(spark, cfg, tmp_store_dir):
-    """offload_conditional: same semantics as offload, one linear plan —
-    and rows already carrying claim_check are preserved untouched."""
-    from kafka_connect_claim_check_smt_spark.operators.claimcheck import offload_conditional
-
+def test_offload_keeps_existing_claim_check(spark, cfg):
+    """Re-offloading a frame that already holds claim_check keeps every
+    reference: offloaded rows carry the placeholder, which is under the
+    threshold, yet their claim_check must survive and hydrate to the
+    original payload."""
     df = make_df(spark)
-    out = offload_conditional(df, cfg, uploaded_at_ms=7)
-    rows = {r.path: r for r in out.collect()}
-    assert rows["a.py"].claim_check is None and rows["e.py"].claim_check is None
+    first = offload(df, cfg, uploaded_at_ms=7)
+    frozen = spark.createDataFrame(first.collect(), first.schema)
+    again = offload(frozen, cfg, uploaded_at_ms=99)
+    rows = {r.path: r for r in again.collect()}
     assert rows["c.py"].content == PLACEHOLDER
-    assert rows["c.py"].claim_check.sha256 == hashlib.sha256(("BIG " * 100).encode()).hexdigest()
-    assert rows["c.py"].claim_check.uploaded_at == 7
-    # second pass over already-offloaded rows: claim_check preserved, no re-offload
-    frozen = spark.createDataFrame(out.collect(), out.schema)
-    again = offload_conditional(frozen, cfg, uploaded_at_ms=99)
-    rows2 = {r.path: r for r in again.collect()}
-    assert rows2["c.py"].claim_check.uploaded_at == 7  # untouched
-    restored = hydrate(again, cfg)
-    assert {r.path: r.content for r in restored.collect()}["d.py"] == "HUGE " * 1000
+    assert rows["c.py"].claim_check.uploaded_at == 7  # untouched, not re-offloaded
+    assert rows["a.py"].claim_check is None and rows["e.py"].claim_check is None
+    restored = {r.path: r.content for r in hydrate(again, cfg).collect()}
+    assert restored == {r.path: r.content for r in df.collect()}
 
 
 def test_serialized_record_size_matches_reference_measurement(spark):
@@ -207,13 +203,10 @@ def test_serialized_record_size_matches_reference_measurement(spark):
     assert szs["a.py"] > 120 > szs["b.py"]
 
 
-def test_offload_conditional_schemaless_null_placeholder(spark, cfg):
-    """ADVICE r2: offload_conditional honors placeholder=None (schemaless,
-    ≙ RecordValueDefaults.forSchemaless) like offload does — the streaming
-    post-merge path can now carry schemaless payloads."""
-    from kafka_connect_claim_check_smt_spark.operators.claimcheck import offload_conditional
-
-    out = offload_conditional(make_df(spark), cfg, uploaded_at_ms=7, placeholder=None)
+def test_offload_schemaless_null_placeholder(spark, cfg):
+    """placeholder=None (schemaless, ≙ RecordValueDefaults.forSchemaless):
+    offloaded rows carry NULL content and still hydrate."""
+    out = offload(make_df(spark), cfg, uploaded_at_ms=7, placeholder=None)
     rows = {r.path: r for r in out.collect()}
     assert rows["c.py"].content is None and rows["c.py"].claim_check is not None
     assert rows["a.py"].content is not None  # inline untouched

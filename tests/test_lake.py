@@ -409,14 +409,30 @@ def test_iceberg_rollback_deletes_epochs_before_restore():
     between the two statements errs toward over-deletion (idempotent
     re-merge) and never toward under-deletion (stale epoch rows silently
     skipping a corrected replay after the data restore). No Iceberg runtime
-    in this sandbox, so the statement order is pinned on the source."""
+    is available to the suite, so the statement order is pinned on the
+    ``spark.sql`` calls in the method's AST — a docstring or comment that
+    mentions the statements cannot satisfy it."""
+    import ast
     import inspect
+    import textwrap
 
     from kafka_connect_claim_check_smt_spark.plans.iceberg import IcebergTable
 
-    src = inspect.getsource(IcebergTable.rollback)
-    assert "DELETE FROM" in src and "rollback_to_snapshot" in src
-    assert src.index("DELETE FROM") < src.index("CALL system.rollback_to_snapshot")
+    tree = ast.parse(textwrap.dedent(inspect.getsource(IcebergTable.rollback)))
+    # every spark.sql(...) statement, in source order
+    order = [
+        ast.unparse(node.args[0])
+        for node in sorted(
+            (n for n in ast.walk(tree)
+             if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+             and n.func.attr == "sql"),
+            key=lambda n: n.lineno,
+        )
+    ]
+    delete = [i for i, sql in enumerate(order) if "DELETE FROM {self._epochs}" in sql]
+    restore = [i for i, sql in enumerate(order) if "CALL system.rollback_to_snapshot(" in sql]
+    assert len(delete) == 1 and len(restore) == 1, order
+    assert delete[0] < restore[0]
 
 
 # -- change data feed (read_changes) ------------------------------------------

@@ -150,34 +150,6 @@ def test_offloaded_content_is_placeholder_in_table(spark, dirs):
     assert off.filter(F.col("claim_check.sha256").isNull()).count() == 0
 
 
-def test_offload_stage_pre_vs_post_merge_identical(spark, dirs):
-    """The pre_merge shuffle-bytes variant (placeholders cross the exchange,
-    not content) must produce byte-identical final state to post_merge —
-    it's a pure physical-plan trade (extra idempotent puts vs lighter
-    exchange), never a semantics change."""
-    ev = _events(spark)
-    hi = ev.agg(F.max("commit_seq")).collect()[0][0] + 1
-    tables = {}
-    for stage in ("post_merge", "pre_merge"):
-        cfg = ClaimCheckConfig(root_dir=f"{dirs['blobs']}-{stage}", threshold_bytes=THR)
-        t = LakeTable(
-            spark, f"{dirs['lake']}-{stage}", ["repo", "path"], "commit_seq",
-            num_buckets=4, op_col="op",
-        )
-        for b in range(3):
-            chunk = hi // 3 + 1
-            batch = ev.filter(
-                (F.col("commit_seq") >= b * chunk) & (F.col("commit_seq") < (b + 1) * chunk)
-            )
-            apply_cdc_batch(batch, b, t, cfg, uploaded_at_ms=0, offload_stage=stage)
-        tables[stage] = {
-            (r.repo, r.path): (r.commit_seq, hashlib.sha256(r.content.encode()).hexdigest())
-            for r in read_back(spark, t, cfg).collect()
-        }
-        _assert_matches_golden(spark, t, cfg)
-    assert tables["pre_merge"] == tables["post_merge"]
-
-
 def test_merge_strategy_sort_vs_agg_identical(spark, dirs):
     """merge_strategy='agg' (map-side max_by combine — the hot-key-skew plan,
     see tools/skew_experiment.py and BENCH/BASELINE.md) must replay to
