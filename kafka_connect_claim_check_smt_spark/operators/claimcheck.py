@@ -21,13 +21,19 @@ plus the sha256 field. NULL struct ⇔ "no header" ⇔ inline payload.
 
 Scale notes (100 TB / 1000 executors):
 - The size predicate and metadata struct construction are codegen'd; no shuffle.
-- The plan is linear (one projection around one pandas UDF): the input plan is
-  evaluated exactly once, so offload can sit inside a larger pipeline — the
-  replay runs it after the merge's LWW dedup, inside the write job — without
-  a persist. Every row crosses the Arrow boundary, but an inline row costs
-  one NULL slot and no I/O.
-- Blob writes are executor-local, content-addressed (idempotent under task
-  retry), deduplicated per Arrow batch, and pooled for latency-bound stores.
+- Both plans are linear (one projection around one pandas UDF): the input
+  plan is evaluated exactly once, so offload can sit inside a larger
+  pipeline — the replay runs it after the merge's LWW dedup, inside the write
+  job — without a persist, and hydrate scans its table once. Every row
+  crosses the Arrow boundary, but an inline row costs one NULL slot and no
+  I/O.
+- hydrate's get UDF is nondeterministic to Catalyst, so a filter on the
+  hydrated content is not pushed below it (the push would evaluate the UDF
+  twice and fetch every blob twice); the price is that no filter above
+  hydrate is pushed below it — filter the input instead.
+- Blob I/O is executor-local and deduplicated per Arrow batch (one put per
+  distinct sha, one get per distinct URL), pooled for latency-bound stores;
+  writes are content-addressed, so idempotent under task retry.
 """
 
 from __future__ import annotations
@@ -147,42 +153,49 @@ def _store_put_fn(store_factory: StoreFactory):
 
 
 def _store_get_fn(store_factory: StoreFactory, verify: bool):
-    """Arrow-batched get: one fetch per distinct URL per batch (repeated
-    references hit the in-batch cache), fanned out over a thread pool;
-    integrity (size + sha256) verified per row against the fetched bytes."""
+    """Arrow-batched get over the metadata struct: NULL structs (inline rows)
+    map to NULL and do no I/O; the rest cost one fetch per distinct URL per
+    batch (repeated references hit the in-batch cache), fanned out over a
+    thread pool, with integrity (size + sha256) verified per row against the
+    fetched bytes. The store is built lazily, on the first batch that holds
+    a reference."""
     holder: list = []
 
-    def get_batch(meta_df):  # pd.DataFrame[reference_url, original_size_bytes, sha256]
-        if not holder:
-            holder.append(store_factory())
-        store = holder[0]
-
-        distinct = list(dict.fromkeys(meta_df["reference_url"]))
-        blobs = dict(zip(distinct, _io_map(store, store.get, distinct)))
+    def get_batch(meta_df):  # pd.DataFrame[reference_url, original_size_bytes, sha256, ...]
+        urls = meta_df["reference_url"].tolist()
+        distinct = [u for u in dict.fromkeys(urls) if u is not None]
+        blobs = {}
+        if distinct:
+            if not holder:
+                holder.append(store_factory())
+            store = holder[0]
+            blobs = dict(zip(distinct, _io_map(store, store.get, distinct)))
         # digest only when verifying — verify=False exists to skip exactly
         # this per-blob CPU on the hot read path
         digests = (
             {u: hashlib.sha256(b).hexdigest() for u, b in blobs.items()} if verify else {}
         )
 
-        def check_one(row) -> str:
-            data = blobs[row.reference_url]
+        out = []
+        sizes, shas = meta_df["original_size_bytes"].tolist(), meta_df["sha256"].tolist()
+        for url, size, sha in zip(urls, sizes, shas):
+            if url is None:
+                out.append(None)
+                continue
+            data = blobs[url]
             if verify:
-                if len(data) != row.original_size_bytes:
+                if len(data) != size:
                     # ≙ size check, ClaimCheckSinkTransform.java:99-106
                     raise DataIntegrityError(
-                        f"size mismatch for {row.reference_url}: "
-                        f"expected {row.original_size_bytes}, got {len(data)}"
+                        f"size mismatch for {url}: expected {size}, got {len(data)}"
                     )
-                if digests[row.reference_url] != row.sha256:
+                if digests[url] != sha:
                     # strengthened integrity check (BASELINE.json)
                     raise DataIntegrityError(
-                        f"sha256 mismatch for {row.reference_url}: "
-                        f"expected {row.sha256}, got {digests[row.reference_url]}"
+                        f"sha256 mismatch for {url}: expected {sha}, got {digests[url]}"
                     )
-            return data.decode("utf-8")
-
-        return meta_df.apply(check_one, axis=1)
+            out.append(data.decode("utf-8"))
+        return meta_df["reference_url"].__class__(out, index=meta_df.index)
 
     return get_batch
 
@@ -269,21 +282,24 @@ def hydrate(
     """R2 — claim-check hydration.
 
     Rows with NULL ``claim_check`` pass through untouched (≙ header-missing
-    short-circuit, ClaimCheckSinkTransform.java:74-90 — the filter runs before
-    the UDF so inline rows never reach Python). Offloaded rows are retrieved,
+    short-circuit, ClaimCheckSinkTransform.java:74-90): they cross the Arrow
+    boundary as NULL structs and do no I/O. Offloaded rows are retrieved,
     integrity-checked (R7, strengthened to sha256), restored, and the metadata
     column is dropped (≙ header removal, :111-112).
+
+    One linear plan over one scan of ``df``:
+    ``when(claim_check IS NOT NULL, get(claim_check)).otherwise(content)``.
+    The get UDF is marked nondeterministic, so Catalyst neither duplicates it
+    into a pushed-down filter on ``content`` (which would fetch every blob
+    twice) nor pushes any filter below it: apply selective filters to ``df``
+    BEFORE hydrating, or every offloaded row of ``df`` is fetched.
     """
     factory = store_factory or (lambda: make_store(cfg))
-    has_cc = F.col(CLAIM_CHECK_COL).isNotNull()
-
-    inline = df.filter(~has_cc)
-    off = df.filter(has_cc)
-
-    get_udf = F.pandas_udf(_store_get_fn(factory, verify), StringType())
-    off = off.withColumn(content_col, get_udf(F.col(CLAIM_CHECK_COL)))
-
-    out = inline.unionByName(off)
+    get_udf = F.pandas_udf(_store_get_fn(factory, verify), StringType()).asNondeterministic()
+    cc = F.col(CLAIM_CHECK_COL)
+    out = df.withColumn(
+        content_col, F.when(cc.isNotNull(), get_udf(cc)).otherwise(F.col(content_col))
+    )
     if drop_metadata:
         out = out.drop(CLAIM_CHECK_COL)
     return out

@@ -62,6 +62,9 @@ from .minhash import _MERSENNE, _perm_constants, _shingles_sql, _spread, band_ta
 # spill-safe shuffle joins.
 _SIG_BROADCAST_ROWS = 800_000
 
+# _index.json keys that are index metadata rather than hash params
+_INDEX_META_KEYS = {"band_sig"}
+
 
 class MinHashIndex:
     """Persistent MinHash/LSH near-dup index over two LakeTables."""
@@ -105,7 +108,17 @@ class MinHashIndex:
         ppath = self.root / "_index.json"
         if ppath.exists():
             stored = json.loads(ppath.read_text())
-            if {k_: v for k_, v in stored.items() if k_ in params} != params:
+            # strict: every stored key is a hash param or known metadata, so
+            # a key pinned by a later version fails here instead of being
+            # ignored and misread
+            unknown = sorted(set(stored) - set(params) - _INDEX_META_KEYS)
+            if unknown:
+                raise ClaimCheckError(
+                    f"index at {self.root} pins unrecognized setting(s) {unknown} "
+                    f"in _index.json ({stored}) — it was written by a different "
+                    "version of this engine; rebuild it or open it with that version"
+                )
+            if {k_: v for k_, v in stored.items() if k_ not in _INDEX_META_KEYS} != params:
                 raise ClaimCheckError(
                     f"index at {self.root} was built with {stored}, "
                     f"opened with {params} — probes would silently miss"

@@ -60,7 +60,7 @@ import time
 import uuid
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -294,6 +294,11 @@ def reconcile_schemas(current: T.StructType, incoming: T.StructType) -> T.Struct
                 )
             fields[f.name] = T.StructField(f.name, w, True)
     return T.StructType([fields[n] for n in order])
+
+
+def _quote(name: str) -> str:
+    """Backtick-quoted identifier for SQL-string expressions."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _conform(df: DataFrame, schema: T.StructType) -> DataFrame:
@@ -809,15 +814,21 @@ class LakeTable:
         len(distinct buckets)/num_buckets of the table's files, and the key
         equality predicates push into the parquet scan, so row groups skip on
         column stats too (pair with a sorted :meth:`compact` for tight
-        min/max ranges). Bucket ids are computed driver-side with the same
-        canonical casts as :meth:`bucket_expr` via a one-row Spark expression
-        per distinct key — exact scheme parity, no reimplementation drift."""
+        min/max ranges). Bucket ids come from :meth:`bucket_expr` itself —
+        exact scheme parity, no reimplementation drift — evaluated over an
+        Arrow-built key frame typed with the stored key schema. That frame is
+        a local relation, so the bucket select is folded into it and its
+        collect runs on the driver: building a lookup launches no Spark job."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         if not keys:
             raise ClaimCheckError("lookup() requires at least one key tuple")
         m = self._manifest(self.current_version() if version is None else version)
         schema = self._schema(m)
         if schema is None:
             return self.read(version=version)
+        key_tuples = [tuple(k) if isinstance(k, (list, tuple)) else (k,) for k in keys]
         # key_cols ORDER, not stored-schema order: the caller's key tuples
         # (and the row predicate's zip below) are positional in key_cols, so
         # building this in schema.fields order would silently map values to
@@ -825,16 +836,19 @@ class LakeTable:
         # wrong (or missing) rows.
         key_schema = T.StructType([schema[c] for c in self.key_cols])
         kdf = self.spark.createDataFrame(
-            [tuple(k) if isinstance(k, (list, tuple)) else (k,) for k in keys],
+            pa.Table.from_pylist(
+                [dict(zip(self.key_cols, k)) for k in key_tuples],
+                schema=to_arrow_schema(key_schema),
+            ),
             key_schema,
         )
         buckets = sorted(
-            r[0]
-            for r in kdf.select(
-                self.bucket_expr(kdf, m.get("num_buckets")).alias(BUCKET_COL)
-            )
-            .distinct()
-            .collect()
+            {
+                r[0]
+                for r in kdf.select(
+                    self.bucket_expr(kdf, m.get("num_buckets")).alias(BUCKET_COL)
+                ).collect()
+            }
         )
         rels = [f for b in buckets for f in m["files"].get(str(b), [])]
         # zone-map skipping WITHIN the surviving buckets: a file is read only
@@ -846,13 +860,10 @@ class LakeTable:
         canon_keys = [
             {
                 c: (cv, cv)
-                for c, v in zip(
-                    self.key_cols,
-                    tuple(k) if isinstance(k, (list, tuple)) else (k,),
-                )
+                for c, v in zip(self.key_cols, kt)
                 if (cv := _canon_stat(v)) is not None
             }
-            for k in keys
+            for kt in key_tuples
         ]
         kept = [
             f
@@ -867,8 +878,7 @@ class LakeTable:
             T.StructType(schema.fields + [T.StructField(BUCKET_COL, T.IntegerType())])
         ).parquet(*files)
         pred = None
-        for k in keys:
-            kt = tuple(k) if isinstance(k, (list, tuple)) else (k,)
+        for kt in key_tuples:
             one = None
             for c, v in zip(self.key_cols, kt):
                 cond = F.col(c) == F.lit(v)
@@ -1012,6 +1022,11 @@ class LakeTable:
         as equal iff their ``order_col`` matches: exactly-once replay
         guarantees an order tie means the same event, hence the same bytes —
         no content comparison is shipped through the join.
+
+        Plan build is O(1) py4j calls per operator, not per column: a
+        snapshot already in the target schema is read as is (only one from
+        before a schema change is conformed), and the side, image and explode
+        projections are SQL strings with backtick-quoted names.
         """
         cur = self.current_version()
         to_v = cur if to_version is None else to_version
@@ -1077,51 +1092,50 @@ class LakeTable:
                 df = self.spark.read.schema(
                     T.StructType(s.fields + [T.StructField(BUCKET_COL, T.IntegerType())])
                 ).parquet(*files)
-                df = _conform(df, schema_with_bucket)
-            if self.op_col and self.op_col in [f.name for f in df.schema.fields]:
+                # only a snapshot from before a schema change needs casts and
+                # NULL backfills; the common case reads the target schema as is
+                if s != schema:
+                    df = _conform(df, schema_with_bucket)
+            if self.op_col and self.op_col in schema.names:
                 df = df.filter(
                     F.coalesce(F.col(self.op_col) != F.lit(self.delete_value), F.lit(True))
                 )
             return df
 
-        cols = [f.name for f in schema.fields]
+        # SQL strings, not Column objects: each Column costs several py4j
+        # round-trips, which per column dominated the feed on small epochs
+        cols = schema.names
         data_cols = [c for c in cols if c not in self.key_cols]
         join_keys = [BUCKET_COL, *self.key_cols]
 
         def side(m: dict, tag: str) -> DataFrame:
-            return live_snapshot(m).select(
-                *join_keys,
-                *[F.col(c).alias(f"__{tag}_{c}") for c in data_cols],
-                F.lit(True).alias(f"__{tag}_present"),
+            return live_snapshot(m).selectExpr(
+                *[_quote(c) for c in join_keys],
+                *[f"{_quote(c)} AS {_quote(f'__{tag}_{c}')}" for c in data_cols],
+                f"true AS __{tag}_present",
             )
 
         j = side(old_m, "o").join(side(new_m, "n"), on=join_keys, how="full_outer")
 
-        def image(tag: str) -> Column:
-            return F.struct(
-                *[
-                    (F.col(c) if c in self.key_cols else F.col(f"__{tag}_{c}")).alias(c)
-                    for c in cols
-                ]
+        def entry(change_type: str, tag: str) -> str:
+            image = ", ".join(
+                f"{_quote(c if c in self.key_cols else f'__{tag}_{c}')} AS {_quote(c)}"
+                for c in cols
             )
+            return f"named_struct('t', '{change_type}', 'r', struct({image}))"
 
-        o_p = F.coalesce(F.col("__o_present"), F.lit(False))
-        n_p = F.coalesce(F.col("__n_present"), F.lit(False))
-        changed = F.col(f"__o_{self.order_col}") != F.col(f"__n_{self.order_col}")
-        entry = lambda t, img: F.struct(F.lit(t).alias("t"), img.alias("r"))  # noqa: E731
+        o_p = "coalesce(__o_present, false)"
+        n_p = "coalesce(__n_present, false)"
+        changed = f"{_quote(f'__o_{self.order_col}')} != {_quote(f'__n_{self.order_col}')}"
+        # no ELSE: NULL array -> explode() emits nothing for unchanged keys
         changes = (
-            F.when(~o_p & n_p, F.array(entry("insert", image("n"))))
-            .when(o_p & ~n_p, F.array(entry("delete", image("o"))))
-            .when(
-                o_p & n_p & changed,
-                F.array(
-                    entry("update_preimage", image("o")),
-                    entry("update_postimage", image("n")),
-                ),
-            )
-        )  # no otherwise: NULL array -> explode() emits nothing for unchanged keys
-        return j.select(F.explode(changes).alias("c")).select(
-            F.col("c.t").alias("_change_type"), "c.r.*"
+            f"CASE WHEN (NOT {o_p}) AND {n_p} THEN array({entry('insert', 'n')})"
+            f" WHEN {o_p} AND (NOT {n_p}) THEN array({entry('delete', 'o')})"
+            f" WHEN {o_p} AND {n_p} AND {changed} THEN array("
+            f"{entry('update_preimage', 'o')}, {entry('update_postimage', 'n')}) END"
+        )
+        return j.selectExpr(f"explode({changes}) AS c").selectExpr(
+            "c.t AS _change_type", "c.r.*"
         )
 
     def bucket_expr(self, df: DataFrame, n_buckets: int | None = None):

@@ -44,6 +44,9 @@ class FileSystemStore(BlobStore):
             # ≙ FileSystemStorage.java:67-72
             raise ClaimCheckConfigError(f"storage root is not writable: {root}")
         self.root = root
+        # the traversal guard compares against the real root; resolving it
+        # here, once, keeps a filesystem syscall walk off every get
+        self._real_root = root.resolve()
 
     def _path_for(self, key: str) -> Path:
         return self.root / key[:2] / key
@@ -78,8 +81,7 @@ class FileSystemStore(BlobStore):
             # ≙ FileSystemStorage.java:106-116 (scheme check)
             raise ClaimCheckRetrieveError(f"not a file:// url: {url}")
         path = Path(unquote(parsed.path)).resolve()
-        root = self.root.resolve()
-        if not path.is_relative_to(root):
+        if not path.is_relative_to(self._real_root):
             # traversal guard ≙ FileSystemStorage.java:127-132
             raise ClaimCheckRetrieveError(f"url escapes storage root: {url}")
         if not path.is_file():

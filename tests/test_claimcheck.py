@@ -91,6 +91,9 @@ def test_hydrate_passthrough_without_metadata(spark, cfg):
 
     out = hydrate(df, cfg, store_factory=exploding_store)
     assert out.count() == 2
+    # collected, the inline rows cross the get UDF as NULL structs: the
+    # store is still never built
+    assert sorted(r.path for r in out.collect()) == ["a.py", "b.py"]
 
 
 def _materialize(spark, df):
@@ -214,31 +217,25 @@ def test_offload_schemaless_null_placeholder(spark, cfg):
     assert restored["c.py"] == "BIG " * 100
 
 
-def test_batch_io_deduped_and_batched(spark, cfg, tmp_store_dir, tmp_path):
-    """The round-2 I/O shape (≙ Toxiproxy latency scenario,
-    RetryS3IntegrationTest.java:59-119): within an Arrow batch, repeated
-    payloads cost ONE put and repeated references ONE get — against a
-    10-50 ms/op object store this is the difference between serial per-row
-    I/O and a constant number of pooled round-trips per distinct blob."""
-    log = str(tmp_path / "ops.log")
+def _logging_store_factory(root, log_path, latency_s=0.0):
+    """Store factory whose store appends one line per op to ``log_path`` —
+    visible across the python-worker process boundary (in-object counters
+    are not)."""
 
-    # defined locally so cloudpickle ships the class by value to the python
-    # worker (a test-module-level class is pickled by reference and the
-    # worker can't import tests/)
+    # defined inside a function so cloudpickle ships the class by value to
+    # the python worker (a test-module-level class is pickled by reference
+    # and the worker can't import tests/)
     class LoggingStore:
-        """Appends one line per op to a log file — visible across the
-        python-worker process boundary (in-object counters are not)."""
-
-        def __init__(self, inner, log_path, latency_s=0.0):
-            self._inner, self._log, self._latency = inner, log_path, latency_s
+        def __init__(self, inner):
+            self._inner = inner
 
         def _record(self, op):
             import os
             import time
 
-            if self._latency:
-                time.sleep(self._latency)
-            with open(self._log, "a") as f:
+            if latency_s:
+                time.sleep(latency_s)
+            with open(log_path, "a") as f:
                 f.write(op + "\n")
                 os.fsync(f.fileno())
 
@@ -250,8 +247,23 @@ def test_batch_io_deduped_and_batched(spark, cfg, tmp_store_dir, tmp_path):
             self._record("get")
             return self._inner.get(url)
 
-    def factory():
-        return LoggingStore(FileSystemStore(tmp_store_dir), log, latency_s=0.005)
+    return lambda: LoggingStore(FileSystemStore(root))
+
+
+def _ops(log_path):
+    import os
+
+    return open(log_path).read().split() if os.path.exists(log_path) else []
+
+
+def test_batch_io_deduped_and_batched(spark, cfg, tmp_store_dir, tmp_path):
+    """The round-2 I/O shape (≙ Toxiproxy latency scenario,
+    RetryS3IntegrationTest.java:59-119): within an Arrow batch, repeated
+    payloads cost ONE put and repeated references ONE get — against a
+    10-50 ms/op object store this is the difference between serial per-row
+    I/O and a constant number of pooled round-trips per distinct blob."""
+    log = str(tmp_path / "ops.log")
+    factory = _logging_store_factory(tmp_store_dir, log, latency_s=0.005)
 
     rows = [("r", f"p{i}.py", "DUPLICATE " * 50) for i in range(6)]
     rows += [("r", "q.py", "DISTINCT " * 50)]
@@ -262,11 +274,51 @@ def test_batch_io_deduped_and_batched(spark, cfg, tmp_store_dir, tmp_path):
     )
     assert {r.content for r in restored.collect()} == {"DUPLICATE " * 50, "DISTINCT " * 50}
 
-    ops = open(log).read().split()
+    ops = _ops(log)
     # 7 rows but 2 distinct payloads/URLs in the single Arrow batch:
     # exactly one put and one get per distinct blob
     assert ops.count("put") == 2
     assert ops.count("get") == 2
+
+
+def _offloaded_parquet(spark, cfg, path):
+    """Ten offloaded rows with distinct blobs and five inline rows, frozen
+    into a parquet file (so the hydrate plan under test scans a table)."""
+    rows = [("r", f"p{i}.py", f"BLOB{i} " * 30) for i in range(10)]
+    rows += [("r", f"s{i}.py", "tiny") for i in range(5)]
+    df = spark.createDataFrame(rows, "repo string, path string, content string")
+    offload(df, cfg, uploaded_at_ms=0).write.parquet(path)
+    return spark.read.parquet(path), {p: c for _, p, c in rows}
+
+
+def test_hydrate_is_one_scan_without_union(spark, cfg, tmp_path):
+    """hydrate is one linear plan: the table is scanned once and inline rows
+    ride through the same projection as offloaded ones."""
+    df, orig = _offloaded_parquet(spark, cfg, str(tmp_path / "t"))
+    out = hydrate(df, cfg)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Union" not in plan
+    assert plan.count("FileScan") == 1
+    assert plan.count("ArrowEvalPython") == 1
+    assert {r.path: r.content for r in out.collect()} == orig
+
+
+def test_filter_on_hydrated_content_fetches_each_blob_once(spark, cfg, tmp_store_dir, tmp_path):
+    """A filter on hydrated ``content`` must not be pushed below the get UDF:
+    Catalyst would substitute the UDF into the pushed filter and evaluate it
+    twice, fetching every blob twice."""
+    df, orig = _offloaded_parquet(spark, cfg, str(tmp_path / "t"))
+    log = str(tmp_path / "ops.log")
+    factory = _logging_store_factory(tmp_store_dir, log)
+
+    out = hydrate(df, cfg, store_factory=factory).filter(F.length("content") > 5)
+    got = {r.path: r.content for r in out.collect()}
+    assert got == {p: c for p, c in orig.items() if len(c) > 5}
+    # one get per distinct blob: 10, not 20
+    assert _ops(log).count("get") == 10
+    # a count does not need content, so it fetches nothing
+    assert hydrate(df, cfg, store_factory=factory).count() == 15
+    assert _ops(log).count("get") == 10
 
 
 def test_deterministic_blob_keys_idempotent_under_rerun(spark, cfg, tmp_store_dir):

@@ -208,6 +208,26 @@ def test_param_mismatch_refused_on_reopen(spark, lake_dir):
         _index(spark, lake_dir, num_hashes=16, bands=8)
 
 
+def test_unknown_index_metadata_key_refused_on_reopen(spark, lake_dir):
+    """_index.json is compared strictly: besides the hash params only the
+    known metadata key band_sig may appear. A key this version does not
+    know (say, a flag pinned by a later version) must fail the open, not be
+    ignored — ignoring it would misread the index's format."""
+    import json as _json
+    from pathlib import Path
+
+    _index(spark, lake_dir)
+    ppath = Path(lake_dir) / "_index.json"
+    stored = _json.loads(ppath.read_text())
+    assert stored["band_sig"] is True
+    ppath.write_text(_json.dumps({**stored, "band_layout": "v3"}))
+    with pytest.raises(ClaimCheckError, match=r"unrecognized setting\(s\) \['band_layout'\]"):
+        _index(spark, lake_dir)
+    # the known metadata key alone still opens
+    ppath.write_text(_json.dumps(stored))
+    assert _index(spark, lake_dir)._band_sig is True
+
+
 def test_ingest_indexes_only_survivors(spark, lake_dir):
     idx = _index(spark, lake_dir)
     idx.add(_docs(spark, [(1, _BASE)]), epoch_id="b1")

@@ -530,6 +530,99 @@ def test_read_changes_across_schema_evolution(spark, lake_dir):
     assert "_change_type" in t.read_changes(v1).columns
 
 
+def _expected_changes(t, v0, v1):
+    """Net change rows between two versions, diffed in Python from the two
+    snapshots: the reference for full-row equality of read_changes. Columns
+    of the old snapshot that the new schema lacks cannot occur (schemas only
+    grow); columns it lacks are NULL, as read_changes backfills them."""
+    cols = t.read(version=v1).columns
+    key = lambda r: tuple(r[c] for c in t.key_cols)  # noqa: E731
+    old = {key(r): r.asDict() for r in t.read(version=v0).collect()}
+    new = {key(r): r.asDict() for r in t.read(version=v1).collect()}
+    row = lambda ct, r: (ct, *[r.get(c) for c in cols])  # noqa: E731
+    out = []
+    for k in old.keys() | new.keys():
+        o, n = old.get(k), new.get(k)
+        if o is None:
+            out.append(row("insert", n))
+        elif n is None:
+            out.append(row("delete", o))
+        elif o[t.order_col] != n[t.order_col]:
+            out += [row("update_preimage", o), row("update_postimage", n)]
+    return ["_change_type", *cols], sorted(out, key=repr)
+
+
+def _assert_feed_rows(t, v0, v1):
+    got = t.read_changes(v0, v1)
+    cols, want = _expected_changes(t, v0, v1)
+    assert got.columns == cols
+    assert sorted((tuple(r) for r in got.collect()), key=repr) == want
+    return want
+
+
+def test_read_changes_full_rows_match_snapshot_diff(spark, lake_dir):
+    """Every column of every change row, not just the _change_type counts,
+    equals the diff of the two snapshots — over single epochs and a span."""
+    t = _table(spark, lake_dir, num_buckets=4)
+    rows = synth_change_events_py(600, 80, seed=11, threshold=1024, delete_permille=100)
+    log = spark.createDataFrame(rows).select("repo", "path", "commit_seq", "op", "content", "lang")
+    versions = [t.current_version()]
+    for e, (lo, hi) in enumerate([(0, 200), (200, 400), (400, 600)]):
+        t.merge(log.filter((F.col("commit_seq") >= lo) & (F.col("commit_seq") < hi)), epoch_id=e)
+        versions.append(t.current_version())
+    kinds = set()
+    for v0, v1 in [*zip(versions, versions[1:]), (versions[1], versions[-1])]:
+        kinds |= {r[0] for r in _assert_feed_rows(t, v0, v1)}
+    assert kinds == {"insert", "delete", "update_preimage", "update_postimage"}
+
+
+def test_read_changes_span_over_added_and_widened_column(spark, lake_dir):
+    """A span whose old snapshot predates a schema change: the old side is
+    conformed (new column NULL-backfilled, int widened to long) before the
+    diff, so its preimages carry the new schema."""
+    t = LakeTable(spark, lake_dir, ["k"], "seq", num_buckets=4, op_col="op")
+    t.merge(
+        spark.createDataFrame(
+            [(i, 1, "insert", i * 10) for i in range(12)], "k long, seq long, op string, n int"
+        ),
+        epoch_id=0,
+    )
+    v1 = t.current_version()
+    t.merge(
+        spark.createDataFrame(
+            [(1, 2, "update", 2**40, "py"), (2, 2, "delete", None, None), (20, 2, "insert", 7, "go")],
+            "k long, seq long, op string, n long, lang string",
+        ),
+        epoch_id=1,
+    )
+    want = _assert_feed_rows(t, v1, t.current_version())
+    assert ("update_preimage", 1, 1, "insert", 10, None) in want
+    assert ("update_postimage", 1, 2, "update", 2**40, "py") in want
+    assert t.read_changes(v1).schema["n"].dataType.simpleString() == "bigint"
+
+
+def test_read_changes_quotes_column_names(spark, lake_dir):
+    """Key, order and data columns whose names are not plain SQL identifiers
+    (a space, a hyphen, a reserved word, a leading digit) come through the
+    feed's SQL-string projections."""
+    t = LakeTable(spark, lake_dir, ["key id"], "seq-no", num_buckets=4)
+    schema = "`key id` string, `seq-no` long, `a-b` string, `order` int, `2nd` int"
+    t.merge(
+        spark.createDataFrame([(f"k{i}", 1, f"x{i}", i, -i) for i in range(8)], schema), epoch_id=0
+    )
+    v1 = t.current_version()
+    t.merge(
+        spark.createDataFrame([("k1", 2, "y1", 100, 0), ("k9", 2, "y9", 9, 0)], schema), epoch_id=1
+    )
+    want = _assert_feed_rows(t, v1, t.current_version())
+    assert t.read_changes(v1).columns == ["_change_type", "key id", "seq-no", "a-b", "order", "2nd"]
+    assert sorted(want) == [
+        ("insert", "k9", 2, "y9", 9, 0),
+        ("update_postimage", "k1", 2, "y1", 100, 0),
+        ("update_preimage", "k1", 1, "x1", 1, -1),
+    ]
+
+
 def test_read_changes_prunes_to_touched_buckets(spark, lake_dir):
     t = _table(spark, lake_dir, num_buckets=8)
     rows = [(f"r{i}", f"p{i}", 1, "insert", "v1") for i in range(64)]
@@ -784,6 +877,63 @@ def test_lookup_key_order_independent_of_schema_order(spark, lake_dir):
     got = {(r.repo, r.path): r.content
            for r in t.lookup([("r5", "p5"), ("r9", "p9")]).collect()}
     assert got == {("r5", "p5"): "v5", ("r9", "p9"): "v9"}
+
+
+def test_lookup_int_key_on_widened_table(spark, lake_dir):
+    """An int key on a table whose key was widened int→long: the Arrow key
+    frame carries the stored key type (long) into bucket_expr's canonical
+    cast, so keys written before and after the widening are both found."""
+    t = LakeTable(spark, lake_dir, ["k"], "seq", num_buckets=8)
+    t.merge(
+        spark.createDataFrame([(i, 1, f"a{i}") for i in range(40)], "k int, seq long, v string"),
+        epoch_id=0,
+    )
+    t.merge(
+        spark.createDataFrame(
+            [(i, 2, f"b{i}") for i in range(30, 70)], "k long, seq long, v string"
+        ),
+        epoch_id=1,
+    )
+    assert t.read().schema["k"].dataType.simpleString() == "bigint"
+    keys = [3, 17, 35, 64]
+    got = sorted(tuple(r) for r in t.lookup([(k,) for k in keys]).collect())
+    want = sorted(tuple(r) for r in t.read().filter(F.col("k").isin(keys)).collect())
+    assert got == want and len(want) == 4
+    assert t.last_probe_stats["buckets_scanned"] < t.last_probe_stats["buckets_with_data"]
+
+
+def test_lookup_double_key(spark, lake_dir):
+    t = LakeTable(spark, lake_dir, ["x"], "seq", num_buckets=8)
+    t.merge(
+        spark.createDataFrame(
+            [(i / 4, 1, f"v{i}") for i in range(-20, 40)], "x double, seq long, v string"
+        ),
+        epoch_id=0,
+    )
+    keys = [-2.5, 0.0, 1.25, 9.75, 123.0]  # 123.0 is absent
+    got = sorted(tuple(r) for r in t.lookup([(k,) for k in keys]).collect())
+    want = sorted(tuple(r) for r in t.read().filter(F.col("x").isin(keys)).collect())
+    assert got == want and len(want) == 4
+
+
+def test_lookup_builds_without_spark_job(spark, lake_dir):
+    """Routing keys to buckets runs on the driver: the key frame is a local
+    relation, so building the lookup launches no Spark job."""
+    t = _table(spark, lake_dir, num_buckets=8)
+    rows = [(f"r{i}", f"p{i}", 1, "insert", f"v{i}") for i in range(64)]
+    t.merge(spark.createDataFrame(rows, CE_SCHEMA), epoch_id=0)
+    sc = spark.sparkContext
+    group = "test_lookup_builds_without_spark_job"
+    sc.setJobGroup(group, group)
+    try:
+        out = t.lookup([("r5", "p5"), ("r9", "p9"), ("r3", "p3")])
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        # the tracker does see this group's jobs: running the lookup does
+        assert len(out.collect()) == 3
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
 
 
 def test_compact_sort_by_key_orders_rows(spark, lake_dir):
